@@ -150,14 +150,18 @@ def closure(
     which does O(depth) shuffles over frontier-sized (not closure-sized)
     inputs. ``localCheckpoint`` truncates lineage each round so the plan
     doesn't grow exponentially (SURVEY.md §4 item 1). Terminates at
-    fixpoint; ``max_iterations`` guards cyclic inputs.
+    fixpoint; ``max_iterations`` guards cyclic inputs (a warning, never
+    a silent cap).
 
-    The base edge list is constant across rounds; when it is small
-    (≤ ``_CLOSURE_BROADCAST_EDGES`` rows — known for free after its
-    checkpoint) it is broadcast into every extend join, so the frontier
-    is never shuffled for the join — only the anti-join/dedup moves it.
-    Ontology hierarchies are exactly this shape: edges ≈ #concepts,
-    closure ≫ edges.
+    Small graphs skip the join loop: when the deduplicated base edge
+    list has at most ``_LOCAL_FIXPOINT_EDGES`` rows (known for free
+    after its checkpoint) and both endpoints share a type, the same
+    semi-naive rounds run as ONE ``coalesce(1).mapInArrow`` task
+    (:func:`_closure_kernel`, one vectorized numpy step per round over
+    sorted int64 pair keys) — the ontology case, where per-round job
+    launches, not data, were the whole cost. Same rows, same
+    ``max_iterations`` semantics, same warning. Larger inputs run the
+    join loop, which scales with the cluster.
     """
     # a half-NULL edge is not an edge: drop it whole, matching
     # topo_depth/depth_histogram (a NULL endpoint would otherwise
@@ -171,13 +175,36 @@ def closure(
         .distinct()
         .localCheckpoint()
     )
-    small_base = base.count() <= _CLOSURE_BROADCAST_EDGES
+    if _runs_locally(base):
+        acc, status = _local_fixpoint(
+            base,
+            _closure_kernel,
+            [("node", None), ("anc", None)],
+            max_iterations=max_iterations,
+        )
+        converged = status == 0
+    else:
+        acc, converged = _closure_rounds(base, max_iterations)
+    if not converged:
+        # never cap silently: a truncated closure looks complete but isn't
+        import warnings
+
+        warnings.warn(
+            f"closure did not reach fixpoint within {max_iterations} "
+            "iterations; result is truncated at that depth",
+            stacklevel=2,
+        )
+    return acc
+
+
+def _closure_rounds(
+    base: DataFrame, max_iterations: int
+) -> tuple[DataFrame, bool]:
+    """:func:`closure`'s join loop over the checkpointed ``(node, anc)``
+    base edges → ``(closure, converged)``."""
     acc = base
     frontier = base
     hops = base.select(F.col("node").alias("anc"), F.col("anc").alias("anc2"))
-    if small_base:
-        hops = F.broadcast(hops)
-    converged = False
     for _ in range(max_iterations):
         # frontier ⋈ base: extend each known pair by one hop; dedup AFTER
         # the anti join (smaller input to the distinct shuffle)
@@ -190,23 +217,13 @@ def closure(
             .localCheckpoint()
         )
         if new_pairs.isEmpty():
-            converged = True
-            break
+            return acc, True
         # acc is a union of already-checkpointed frontiers — unioning is
         # free; re-checkpointing it each round would materialize the whole
         # closure O(depth) times
         acc = acc.union(new_pairs)
         frontier = new_pairs
-    if not converged:
-        # never cap silently: a truncated closure looks complete but isn't
-        import warnings
-
-        warnings.warn(
-            f"closure did not reach fixpoint within {max_iterations} "
-            "iterations; result is truncated at that depth",
-            stacklevel=2,
-        )
-    return acc
+    return acc, False
 
 
 def closure_doubling(
@@ -274,9 +291,236 @@ _CC_LOCAL_EDGE_LIMIT = 1_000_000
 #: once and the node-sized side shuffles instead).
 _PAGERANK_BROADCAST_NODES = 1_000_000
 
-#: Base-edge count up to which transitive closure broadcasts the edge
-#: list into each frontier-extend join.
-_CLOSURE_BROADCAST_EDGES = 1_000_000
+#: Deduplicated base-edge count up to which :func:`closure` (and so
+#: :func:`depth_histogram`), :func:`topo_depth` and
+#: :func:`strongly_connected_components` run their whole fixpoint as one
+#: vectorized task (:func:`_local_fixpoint`) instead of a join loop that
+#: launches jobs every round — the :func:`connected_components`
+#: single-task design. A million (id, id) rows is a few tens of MB of
+#: Arrow in one Python worker.
+_LOCAL_FIXPOINT_EDGES = 1_000_000
+
+
+def _runs_locally(edges: DataFrame) -> bool:
+    """Whether a checkpointed two-column edge frame takes the single-task
+    path: at most ``_LOCAL_FIXPOINT_EDGES`` rows (a count of the pinned
+    blocks) and endpoint columns of one type, so both map onto a single
+    sorted id domain."""
+    a, b = edges.schema.fields
+    return (
+        a.dataType == b.dataType
+        and edges.count() <= _LOCAL_FIXPOINT_EDGES
+    )
+
+
+def _dense_ids(src, dst):
+    """Sorted distinct ids of two same-typed Arrow columns plus each
+    column as int64 indexes into them. Index order is id order
+    (numbers numerically, strings by UTF-8 bytes — Spark's order), so
+    a minimum over indexes is the minimum id."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = pc.unique(pa.chunked_array(src.chunks + dst.chunks, src.type))
+    ids = ids.take(pc.sort_indices(ids))
+    return ids, *(
+        pc.index_in(col, value_set=ids).to_numpy().astype(np.int64)
+        for col in (src, dst)
+    )
+
+
+def _local_fixpoint(
+    edges: DataFrame, kernel, out: list, **params
+) -> tuple[DataFrame, int]:
+    """Run a whole graph fixpoint in ONE task: ``edges`` (two
+    same-typed, non-NULL, deduplicated endpoint columns) streams through
+    ``coalesce(1).mapInArrow`` into ``kernel(src, dst, n, **params)``,
+    which sees the endpoints as dense int64 indexes over ``n`` sorted
+    distinct ids (:func:`_dense_ids`) and returns ``(status, columns)``.
+    ``out`` names the output columns as ``(name, type)``; a ``None``
+    type is an id column, given as indexes and mapped back to ids.
+
+    The result is ``localCheckpoint``-pinned, and the kernel's status
+    (0 = converged) rides one extra trailer row read by an
+    :class:`~pyspark.sql.Observation` on that checkpoint — so the
+    caller can warn or raise at call time exactly as its join loop
+    would, with no extra job."""
+    import pyarrow as pa
+    from pyspark.sql import Observation
+    from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    id_type = edges.schema.fields[0].dataType
+    schema = StructType(
+        [StructField(name, t or id_type) for name, t in out]
+        + [StructField("__status", IntegerType())]
+    )
+    arrow_schema = to_arrow_schema(schema)
+    empty_ids = pa.chunked_array([], to_arrow_type(id_type))
+    is_id = [t is None for _, t in out]
+
+    def run(batches):
+        batches = list(batches)
+        if batches:
+            table = pa.Table.from_batches(batches)
+            src, dst = table.column(0), table.column(1)
+        else:
+            src = dst = empty_ids
+        ids, s, d = _dense_ids(src, dst)
+        status, cols = kernel(s, d, len(ids), **params)
+        fields = list(arrow_schema)
+        rows = pa.Table.from_arrays(
+            [
+                ids.take(pa.array(c)) if id_col else pa.array(c, f.type)
+                for c, id_col, f in zip(cols, is_id, fields)
+            ]
+            + [pa.nulls(len(cols[0]), pa.int32())],
+            schema=arrow_schema,
+        )
+        yield from rows.to_batches(max_chunksize=1 << 16)
+        yield pa.RecordBatch.from_arrays(
+            [pa.nulls(1, f.type) for f in fields[:-1]]
+            + [pa.array([status], pa.int32())],
+            schema=arrow_schema,
+        )
+
+    obs = Observation()
+    pinned = (
+        edges.coalesce(1)
+        .mapInArrow(run, schema)
+        .observe(obs, F.max("__status").alias("status"))
+        .localCheckpoint()
+    )
+    status = obs.get["status"]
+    return pinned.where(F.col("__status").isNull()).drop("__status"), status
+
+
+def _member(sorted_keys, keys):
+    """Mask of ``keys`` present in the sorted array ``sorted_keys``."""
+    import numpy as np
+
+    if sorted_keys.size == 0:
+        return np.zeros(keys.size, bool)
+    i = np.minimum(np.searchsorted(sorted_keys, keys), sorted_keys.size - 1)
+    return sorted_keys[i] == keys
+
+
+def _closure_kernel(src, dst, n, max_iterations):
+    """:func:`closure`'s semi-naive rounds over dense ids. A pair is the
+    int64 key ``node * n + anc``; the closure is a sorted key array.
+    Each round extends every frontier pair by all base edges out of its
+    ancestor (a CSR gather over edges sorted by child), and the new
+    frontier is the extended keys not yet in the closure. Status 1 =
+    still growing after ``max_iterations`` rounds."""
+    import numpy as np
+
+    hop = dst[np.argsort(src, kind="stable")]
+    start = np.zeros(n + 1, np.int64)
+    np.cumsum(np.bincount(src, minlength=n), out=start[1:])
+    acc = np.unique(src * n + dst)
+    frontier = acc
+    status = 1
+    for _ in range(max_iterations):
+        node, anc = np.divmod(frontier, n)
+        deg = start[anc + 1] - start[anc]
+        pos = np.repeat(start[anc] - np.cumsum(deg) + deg, deg)
+        pos += np.arange(pos.size)
+        cand = np.unique(np.repeat(node, deg) * n + hop[pos])
+        new = cand[~_member(acc, cand)]
+        if new.size == 0:
+            status = 0
+            break
+        acc = np.sort(np.concatenate([acc, new]), kind="stable")
+        frontier = new
+    node, anc = np.divmod(acc, n)
+    return status, [node, anc]
+
+
+def _topo_depth_kernel(src, dst, n, max_iterations):
+    """:func:`topo_depth`'s frontier rounds over dense ids (``src`` =
+    child, ``dst`` = parent) as boolean masks: roots (never a child)
+    are level 0, and round ``t`` marks every child of round ``t-1``'s
+    frontier with level ``t`` — the last level written is the largest.
+    Status 1 = frontier not drained after ``max_iterations`` rounds."""
+    import numpy as np
+
+    frontier = np.ones(n, bool)
+    frontier[src] = False
+    depth = np.where(frontier, 0, -1).astype(np.int64)
+    status = 1
+    for t in range(1, max_iterations + 1):
+        nxt = np.zeros(n, bool)
+        nxt[src[frontier[dst]]] = True
+        if not nxt.any():
+            status = 0
+            break
+        depth[nxt] = t
+        frontier = nxt
+    node = np.flatnonzero(depth >= 0)
+    return status, [node, depth[node]]
+
+
+def _scc_kernel(
+    src, dst, n, max_trim_rounds, max_color_rounds, max_outer_rounds
+):
+    """:func:`strongly_connected_components`' phases over dense ids,
+    round for round: degree trim, min-color propagation of only the
+    nodes improved last round (``np.minimum.at``), and the backward
+    sweep from every pivot through intra-color edges. Status 1 =
+    coloring still improving after ``max_color_rounds``; status 2 =
+    nodes left after ``max_outer_rounds``."""
+    import numpy as np
+
+    idx = np.arange(n)
+    label = np.full(n, -1, np.int64)
+    alive = np.ones(n, bool)
+    none = [label[:0], label[:0]]
+    for _ in range(max_trim_rounds):
+        keep = np.zeros(n, bool)
+        keep[src] = True
+        has_in = np.zeros(n, bool)
+        has_in[dst] = True
+        keep &= has_in
+        trimmed = alive & ~keep
+        if not trimmed.any():
+            break
+        label[trimmed] = idx[trimmed]
+        alive &= keep
+        live = alive[src] & alive[dst]
+        src, dst = src[live], dst[live]
+    for _ in range(max_outer_rounds):
+        if not alive.any():
+            break
+        color = idx.copy()
+        delta = alive
+        for _ in range(max_color_rounds):
+            m = delta[src]
+            cand = np.full(n, n)
+            np.minimum.at(cand, dst[m], color[src[m]])
+            delta = cand < color
+            np.minimum(color, cand, out=color)
+            if not delta.any():
+                break
+        else:
+            return 1, none
+        intra = color[src] == color[dst]
+        csrc, cdst = src[intra], dst[intra]
+        reached = alive & (color == idx)
+        frontier = reached
+        while frontier.any():
+            step = np.zeros(n, bool)
+            step[csrc[frontier[cdst]]] = True
+            frontier = step & ~reached
+            reached |= frontier
+        label[reached] = color[reached]
+        alive &= ~reached
+        live = alive[src] & alive[dst]
+        src, dst = src[live], dst[live]
+    if alive.any():
+        return 2, none
+    node = np.flatnonzero(label >= 0)
+    return 0, [node, label[node]]
 
 
 def _union_find_partition(batches):
@@ -1021,8 +1265,10 @@ def depth_histogram(
     "how deep is this hierarchy, and where does the mass sit" — as one
     table: ``(n_ancestors, n_nodes)``.
 
-    Composition of :func:`closure` (semi-naive, frontier-sized
-    shuffles) with two map-side-combined aggregates: per-node ancestor
+    Composition of :func:`closure` (semi-naive; one vectorized task at
+    or below its ``_LOCAL_FIXPOINT_EDGES`` gate, frontier-sized
+    shuffles above it — the truncation warning fires on either path)
+    with two map-side-combined aggregates: per-node ancestor
     counts collapse the closure (its biggest table) immediately, and
     the histogram aggregate is depth-sized. Root nodes (no ancestors)
     do not appear in the closure; ``include_roots=True`` adds the
@@ -1144,13 +1390,21 @@ def topo_depth(
 
     Semi-naive frontier iteration, the :func:`closure` pattern:
     ``frontier_t`` = nodes with SOME root path of length ``t`` (one
-    broadcast-base join + one frontier-sized distinct per round), and a
+    base join + one frontier-sized distinct per round), and a
     node's level is the largest ``t`` that ever reaches it — one final
     max-aggregate over the accumulated (node, t) stream, whose total
     size is bounded by Σ|frontier_t| (= |nodes| exactly on trees).
     Nothing closure-sized ever materializes: this runs on the raw edge
     list, not on the transitive closure.
+
+    Below the :func:`closure` gate (at most ``_LOCAL_FIXPOINT_EDGES``
+    deduplicated edges, same-typed endpoints) the same rounds run as
+    ONE ``coalesce(1).mapInArrow`` task over boolean frontier masks
+    (:func:`_topo_depth_kernel`) — same rows, same warning; larger
+    inputs run the join loop.
     """
+    from pyspark.sql.types import LongType
+
     base = (
         edges.select(
             F.col(src_col).alias("node"), F.col(dst_col).alias("parent")
@@ -1159,7 +1413,33 @@ def topo_depth(
         .distinct()
         .localCheckpoint()
     )
-    small_base = base.count() <= _CLOSURE_BROADCAST_EDGES
+    if _runs_locally(base):
+        out, status = _local_fixpoint(
+            base,
+            _topo_depth_kernel,
+            [("node", None), ("depth", LongType())],
+            max_iterations=max_iterations,
+        )
+        converged = status == 0
+    else:
+        out, converged = _topo_depth_rounds(base, max_iterations)
+    if not converged:
+        import warnings
+
+        warnings.warn(
+            f"topo_depth did not drain its frontier within "
+            f"{max_iterations} iterations (cyclic input?); levels are "
+            "truncated at that depth",
+            stacklevel=2,
+        )
+    return out
+
+
+def _topo_depth_rounds(
+    base: DataFrame, max_iterations: int
+) -> tuple[DataFrame, bool]:
+    """:func:`topo_depth`'s join loop over the checkpointed ``(node,
+    parent)`` edge frame → ``((node, depth), converged)``."""
     # single-scan endpoint explode (the degrees() device) + has-parent
     # flag: roots are endpoints that never appear on the child side
     endpoints = base.select(
@@ -1180,8 +1460,6 @@ def topo_depth(
     down = base.select(
         F.col("parent").alias("node"), F.col("node").alias("child")
     )
-    if small_base:
-        down = F.broadcast(down)
     levels = [roots.select("node", F.lit(0).alias("d"))]
     frontier = roots
     converged = False
@@ -1196,21 +1474,11 @@ def topo_depth(
             converged = True
             break
         levels.append(frontier.select("node", F.lit(t).alias("d")))
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"topo_depth did not drain its frontier within "
-            f"{max_iterations} iterations (cyclic input?); levels are "
-            "truncated at that depth",
-            stacklevel=2,
-        )
     acc = levels[0]
     for piece in levels[1:]:
         acc = acc.union(piece)
-    return acc.groupBy("node").agg(
-        F.max("d").cast("long").alias("depth")
-    )
+    out = acc.groupBy("node").agg(F.max("d").cast("long").alias("depth"))
+    return out, converged
 
 
 def kcore(
@@ -1250,7 +1518,13 @@ def kcore(
     at 100 TB the cost is bounded by O(rounds) scans of a
     monotonically shrinking, never re-shuffled edge list; past the
     broadcast gate the survivor joins degrade to shuffle joins
-    gracefully. ``localCheckpoint`` truncates lineage each round (the
+    gracefully, the ``b`` join first so the last shuffle keys on ``a``
+    and the checkpoint keeps hash(a) — no more edge shuffles than the
+    other order, and the degree count stays exchange-free. Caveat:
+    under AQE (the :mod:`session` default) a checkpoint of an adaptive
+    plan reports no partitioning, so there the degree count shuffles on
+    either path; the zero-exchange count holds with AQE off.
+    ``localCheckpoint`` truncates lineage each round (the
     edge frame feeds BOTH the degree aggregate and the next round's
     semi joins — an unchecked fork would re-execute the whole peel
     chain per consumer, the round-5 fork-without-reuse class; on a
@@ -1282,9 +1556,11 @@ def kcore(
             .where(F.col("__deg") >= k)
             .select("a")
         )
+        # b first: past the broadcast gate the last shuffle keys on a,
+        # so the checkpoint stays hash(a) for the next degree count
         nxt = (
-            sym.join(keep, "a", "semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "semi")
+            sym.join(keep.select(F.col("a").alias("b")), "b", "semi")
+            .join(keep, "a", "semi")
             .localCheckpoint()
         )
         if not fixed and nxt.count() == sym.count():
@@ -1493,6 +1769,15 @@ def strongly_connected_components(
     one endpoint hash — same exposure and same mitigation as q37
     pagerank (AQE skew split); color propagation adds no new skew
     axis because deltas key on the same endpoints.
+
+    Below the :func:`closure` gate (at most ``_LOCAL_FIXPOINT_EDGES``
+    deduplicated edges, same-typed endpoints) the three phases run
+    round for round as ONE ``coalesce(1).mapInArrow`` task
+    (:func:`_scc_kernel`: degree masks, ``np.minimum.at`` coloring,
+    mask-frontier sweep) instead of a job-launching join loop. Ids are
+    ranked through a sorted unique, so the min-id labels are the same
+    for numeric and string ids, and both ``RuntimeError``s fire under
+    the same round caps. Larger inputs run the join loop.
     """
     e_all = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -1500,6 +1785,47 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint()
     )
+    if not _runs_locally(e_all):
+        return _scc_rounds(
+            e_all, max_trim_rounds, max_color_rounds, max_outer_rounds
+        )
+    out, status = _local_fixpoint(
+        e_all,
+        _scc_kernel,
+        [("id", None), ("scc_id", None)],
+        max_trim_rounds=max_trim_rounds,
+        max_color_rounds=max_color_rounds,
+        max_outer_rounds=max_outer_rounds,
+    )
+    if status:
+        raise _scc_failure(status, max_color_rounds, max_outer_rounds)
+    return out
+
+
+def _scc_failure(
+    status: int, max_color_rounds: int, max_outer_rounds: int
+) -> RuntimeError:
+    """The error for an SCC run that hit a round cap (status 1: the
+    coloring, 2: the outer rounds) — the same on both paths."""
+    if status == 1:
+        return RuntimeError(
+            f"scc coloring did not reach fixpoint within "
+            f"{max_color_rounds} rounds; raise max_color_rounds "
+            f"(rounds scale with graph diameter)"
+        )
+    return RuntimeError(
+        f"scc did not converge within {max_outer_rounds} outer rounds"
+    )
+
+
+def _scc_rounds(
+    e_all: DataFrame,
+    max_trim_rounds: int,
+    max_color_rounds: int,
+    max_outer_rounds: int,
+) -> DataFrame:
+    """:func:`strongly_connected_components`' join loop over the
+    checkpointed, deduplicated ``(src, dst)`` edge frame."""
     nodes = (
         e_all.select(F.col("src").alias("id"))
         .union(e_all.select(F.col("dst").alias("id")))
@@ -1571,11 +1897,7 @@ def strongly_connected_components(
             if delta.isEmpty():
                 break
         else:
-            raise RuntimeError(
-                f"scc coloring did not reach fixpoint within "
-                f"{max_color_rounds} rounds; raise max_color_rounds "
-                f"(rounds scale with graph diameter)"
-            )
+            raise _scc_failure(1, max_color_rounds, max_outer_rounds)
         # intra-class edges: both endpoints share a color
         ce = (
             e.join(
@@ -1616,9 +1938,7 @@ def strongly_connected_components(
             .localCheckpoint()
         )
     if not nodes.isEmpty():
-        raise RuntimeError(
-            f"scc did not converge within {max_outer_rounds} outer rounds"
-        )
+        raise _scc_failure(2, max_color_rounds, max_outer_rounds)
     if not assigned:  # empty edge input: no endpoints, empty result
         return e_all.select(
             F.col("src").alias("id"), F.col("dst").alias("scc_id")

@@ -467,7 +467,7 @@ def semantic_join(
     n_bands: int = 8,
     band_bits: int = 8,
 ) -> DataFrame:
-    """CROSS-FRAME embedding join: ``(id_a, id_b, cosine_sim)`` for
+    r"""CROSS-FRAME embedding join: ``(id_a, id_b, cosine_sim)`` for
     every (left, right) pair with rounded cosine >= ``threshold`` —
     the semantic twin of the string-blocked
     :func:`dedup.fuzzy_entity_join` (there two catalogs link on

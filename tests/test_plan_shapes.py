@@ -320,8 +320,16 @@ def test_uniform_pagerank_plan_identity(spark, sf_dir):
     import os
     import re
 
-    df = queries()["q37_pagerank"](spark, sf_dir)
-    s = df._jdf.queryExecution().simpleString()
+    # the pin embeds Exchange hashpartitioning(..., 32): build and plan
+    # under the partition count it was pinned at, whatever the host's
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        df = queries()["q37_pagerank"](spark, sf_dir)
+        s = df._jdf.queryExecution().simpleString()
+    finally:
+        spark.conf.set(key, prev)
     assert "__tp" not in s and "__is_seed" not in s, (
         "seed machinery leaked into the uniform pagerank plan"
     )
@@ -732,6 +740,45 @@ def test_broadcast_if_small_gates_on_measured_count(spark, sf_dir):
         assert "SortMergeJoin" in plan2 or "ShuffledHashJoin" in plan2
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+
+
+def test_kcore_degree_count_exchange_free_past_broadcast_gate(
+    spark, monkeypatch
+):
+    """kcore past broadcast_if_small's survivor gate (its default
+    max_rows patched to 0, auto-broadcast off): the round's semi joins
+    are shuffle joins, and the last one must key on ``a`` so the
+    checkpointed edge frame stays hash(a)-partitioned and the degree
+    count over it needs no Exchange — the same plan the broadcast path
+    gets. Checkpoints carry their partitioning only without AQE (an
+    adaptive plan reports none), so the pin runs with AQE off."""
+    import random
+
+    from ontology_graph_etl_spark.operators import graph, util
+
+    rng = random.Random(3)
+    edges = spark.createDataFrame(
+        [(rng.randrange(60), rng.randrange(60)) for _ in range(300)],
+        "src long, dst long",
+    )
+    want = sorted(map(tuple, graph.kcore(edges, k=3, rounds=3).collect()))
+    confs = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    monkeypatch.setattr(util.broadcast_if_small, "__defaults__", (0,))
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        out = graph.kcore(edges, k=3, rounds=3)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        got = sorted(map(tuple, out.collect()))
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert "Exchange" not in plan, plan
+    assert got == want
 
 
 def test_random_walks_frontier_gate_semantics(spark, sf_dir):

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from ontology_graph_etl_spark.functions import sanitize_value
@@ -395,22 +395,99 @@ def test_min_label_propagation_direct(spark):
     assert got == _cc_reference(edges)
 
 
-def test_closure_shuffle_path_matches_broadcast(spark, monkeypatch):
-    """Closure with the base-edge broadcast disabled (the huge-edge-list
-    path) ≡ the broadcast path."""
-    import random
+def _local_and_loop(call):
+    """Run ``call()`` on the single-task path, then with the
+    ``_LOCAL_FIXPOINT_EDGES`` gate below every edge count (the join
+    loop). Per path: the sorted result rows, or the RuntimeError raised
+    at call time; and the warnings raised at call time."""
+    import warnings
+    from unittest import mock
 
     import ontology_graph_etl_spark.operators.graph as g
 
-    rng = random.Random(13)
-    edges = [(i, i + 1) for i in range(15)] + [
-        (rng.randrange(20), rng.randrange(20, 30)) for _ in range(15)
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    bcast = {(r.node, r.anc) for r in g.closure(df).collect()}
-    monkeypatch.setattr(g, "_CLOSURE_BROADCAST_EDGES", 0)
-    shuffled = {(r.node, r.anc) for r in g.closure(df).collect()}
-    assert bcast == shuffled
+    outcomes = []
+    for gate in (g._LOCAL_FIXPOINT_EDGES, -1):
+        with mock.patch.object(g, "_LOCAL_FIXPOINT_EDGES", gate), \
+                mock.patch.object(
+                    g, "_local_fixpoint", wraps=g._local_fixpoint
+                ) as local, warnings.catch_warnings(record=True) as w:
+            warnings.simplefilter("always")
+            try:
+                df = call()
+            except RuntimeError as e:
+                df = str(e)
+        assert local.called == (gate >= 0)
+        rows = df if isinstance(df, str) else sorted(
+            map(tuple, df.collect()), key=repr
+        )
+        outcomes.append((rows, [str(x.message) for x in w]))
+    return outcomes
+
+
+_digraph = st.lists(
+    st.tuples(
+        st.one_of(st.integers(0, 6), st.none()),
+        st.one_of(st.integers(0, 6), st.none()),
+    ),
+    max_size=14,
+)
+
+
+@given(
+    edges=_digraph,
+    as_str=st.booleans(),
+    rounds=st.integers(0, 4),
+    trim_rounds=st.integers(0, 2),
+    color_rounds=st.integers(1, 4),
+    outer_rounds=st.integers(1, 3),
+)
+@example(  # cycle, self-loop, duplicate edge, half-NULL edges, string ids
+    edges=[(0, 1), (1, 2), (2, 0), (3, 3), (1, 2), (4, None), (None, 5),
+           (2, 10), (10, 4)],
+    as_str=True, rounds=4, trim_rounds=2, color_rounds=4, outer_rounds=3,
+)
+@example(
+    edges=[], as_str=False, rounds=0, trim_rounds=0, color_rounds=1,
+    outer_rounds=1,
+)
+@example(  # long chain into a cycle: truncation, SCC coloring cap hit
+    edges=[(i, i + 1) for i in range(6)] + [(6, 3)],
+    as_str=False, rounds=2, trim_rounds=1, color_rounds=1, outer_rounds=1,
+)
+@example(  # two SCCs in one color class: SCC outer-round cap hit
+    edges=[(0, 1), (1, 0), (1, 2), (2, 3), (3, 2)],
+    as_str=False, rounds=1, trim_rounds=0, color_rounds=4, outer_rounds=1,
+)
+@settings(max_examples=3, deadline=None)
+def test_local_fixpoint_matches_join_loop(
+    spark, edges, as_str, rounds, trim_rounds, color_rounds, outer_rounds
+):
+    """closure, topo_depth and SCC give the same rows, the same
+    truncation warnings and the same RuntimeErrors on the single-task
+    path as on the join loop — on digraphs with cycles, self-loops,
+    duplicate and half-NULL edges, string ids (whose order differs from
+    the numbers', so min-id SCC labels are checked) and empty input,
+    with round caps small enough to hit."""
+    import ontology_graph_etl_spark.operators.graph as g
+
+    if as_str:
+        edges = [
+            tuple(None if v is None else f"n{v}" for v in e) for e in edges
+        ]
+    t = "string" if as_str else "long"
+    df = spark.createDataFrame(edges, f"src {t}, dst {t}")
+    for call in (
+        lambda: g.closure(df, max_iterations=rounds),
+        lambda: g.topo_depth(df, max_iterations=rounds),
+        lambda: g.strongly_connected_components(
+            df,
+            max_trim_rounds=trim_rounds,
+            max_color_rounds=color_rounds,
+            max_outer_rounds=outer_rounds,
+        ),
+    ):
+        local, loop = _local_and_loop(call)
+        assert local == loop
 
 
 def test_pagerank_copartitioned_path_matches_broadcast(spark, monkeypatch):
