@@ -12,7 +12,7 @@ search, text analysis, streaming windows).
 
 Layout:
     session     SparkSession factory (AQE, Arrow, sane shuffle defaults)
-    schemas     pinned StructTypes for every reference input shape
+    schemas     pinned StructTypes for the testdata tables (TESTDATA.md)
     io          parquet/JSONL/text readers for the driver testdata + fixtures
     functions/  scalar expression helpers (sanitize, split-first, templating)
     operators/  relational core, upsert, graph, dedup, similarity, text

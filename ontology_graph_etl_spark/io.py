@@ -55,13 +55,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Load several testdata tables; values stay lazy until an action."""
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def read_jsonl(
     spark: SparkSession,
     path: str,

@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import whitespace_tokens
-from .util import ensure_parallelism
+from .util import Sidecar, ensure_parallelism
 
 
 def tokenize(df: DataFrame, text_col: str, out_col: str = "tokens") -> DataFrame:
@@ -649,45 +649,17 @@ def incremental_near_duplicates(
 # Persisted dedup-index lifecycle: write / read / merge / screen
 # ---------------------------------------------------------------------------
 
-#: Underscore-prefixed so Spark's parquet file listing ignores it
-#: (the _SUCCESS convention); lives INSIDE the index directory so the
-#: parameters travel with the data through copies/renames.
-_DEDUP_INDEX_SIDECAR = "_dedup_index_params.json"
-
 #: The LSH parameters that define index compatibility: screening with
 #: any of these mismatched against the stored rows returns silent
 #: garbage (different permutation constants -> different band keys ->
 #: near-zero collision recall), which is why the sidecar is mandatory.
-DEDUP_INDEX_PARAM_KEYS = ("num_hashes", "bands", "shingle_n", "base_hash")
-
-
-def _hadoop_path_and_fs(spark, path: str):
-    """Back-compat alias of :func:`util.hadoop_path_and_fs` (the shared
-    stored-artifact plumbing since round 11)."""
-    from .util import hadoop_path_and_fs
-
-    return hadoop_path_and_fs(spark, path)
-
-
-def _read_sidecar(spark, path: str) -> dict:
-    from .util import read_json_sidecar
-
-    params = read_json_sidecar(
-        spark,
-        path,
-        _DEDUP_INDEX_SIDECAR,
-        DEDUP_INDEX_PARAM_KEYS,
-        "dedup index",
-        "unparameterized indexes cannot be screened against safely; "
-        "rebuild via write_dedup_index",
-    )
-    return {k: params[k] for k in DEDUP_INDEX_PARAM_KEYS}
-
-
-def _write_sidecar(spark, path: str, params: dict) -> None:
-    from .util import write_json_sidecar
-
-    write_json_sidecar(spark, path, _DEDUP_INDEX_SIDECAR, params)
+_DEDUP_INDEX_SIDECAR = Sidecar(
+    "_dedup_index_params.json",
+    ("num_hashes", "bands", "shingle_n", "base_hash"),
+    "dedup index",
+    "unparameterized indexes cannot be screened against safely; "
+    "rebuild via write_dedup_index",
+)
 
 
 def write_dedup_index(
@@ -722,24 +694,18 @@ def write_dedup_index(
     }
     spark = index.sparkSession
     if mode == "append":
-        stored = _read_sidecar(spark, path)
-        if stored != params:
-            raise ValueError(
-                f"dedup index parameter mismatch: stored {stored} vs "
-                f"append batch {params} — rebuild the index or match "
-                "its parameters"
-            )
+        _DEDUP_INDEX_SIDECAR.check_append(spark, path, params)
     index.write.mode(mode).parquet(path)
     # (re)write the sidecar AFTER the data lands so a failed data write
     # never leaves a sidecar pointing at a missing/partial index
-    _write_sidecar(spark, path, params)
+    _DEDUP_INDEX_SIDECAR.write(spark, path, params)
 
 
 def read_dedup_index(spark, path: str) -> tuple[DataFrame, dict]:
     """Load a stored dedup index AND its parameter sidecar. Returns
     ``(index_df, params)`` so screen callers use the index's own
     parameters instead of re-guessing them."""
-    params = _read_sidecar(spark, path)
+    params = _DEDUP_INDEX_SIDECAR.read(spark, path)
     return spark.read.parquet(path), params
 
 
@@ -768,7 +734,7 @@ def merge_dedup_index(
     frame, value-identical to the recompute by the shared
     :func:`_band_sig_array`/:func:`index_rows_from_signed` machinery.
     """
-    params = _read_sidecar(spark, path)
+    params = _DEDUP_INDEX_SIDECAR.read(spark, path)
     if signed is not None:
         batch_index = index_rows_from_signed(
             signed,
@@ -968,60 +934,6 @@ def simhash_expr(
         term = F.when(vote(m) > 0, F.lit(m)).otherwise(F.lit(0)).cast("long")
         fingerprint = term if fingerprint is None else fingerprint + term
     return hashed.select(F.col(id_col), fingerprint.alias(out_col))
-
-
-def hamming_distance(a, b):
-    """Hamming distance between two 64-bit fingerprints (bit_count of XOR)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_near_duplicates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    block_bits: int = 16,
-) -> DataFrame:
-    """SimHash near-dup: block on 16-bit prefixes (4 rotations) so that
-    any pair within Hamming distance 3 of a 64-bit hash collides in at
-    least one block (pigeonhole over 4 blocks), then verify distance.
-    The shuffle is on (block_idx, block_value) — never all-pairs.
-
-    Fingerprints are materialized before blocking: the simhash
-    expression is 64 folds wide, and project-collapse + the self-join
-    would otherwise recompute it 2 x 4 times (see lsh_candidate_pairs).
-    """
-    fp = simhash(df.select(id_col, text_col), id_col, text_col).localCheckpoint()
-    blocks = fp.select(
-        F.col(id_col).alias("doc"),
-        F.col("simhash"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(64 // block_bits - 1)),
-                lambda b: F.shiftrightunsigned(
-                    F.col("simhash"), b * block_bits
-                ).bitwiseAND(F.lit((1 << block_bits) - 1)),
-            )
-        ).alias("block_idx", "block_val"),
-    )
-    l, r = blocks.alias("l"), blocks.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.block_idx") == F.col("r.block_idx"))
-            & (F.col("l.block_val") == F.col("r.block_val"))
-            & (F.col("l.doc") < F.col("r.doc")),
-        )
-        .select(
-            F.col("l.doc").alias("id_a"),
-            F.col("r.doc").alias("id_b"),
-            hamming_distance(F.col("l.simhash"), F.col("r.simhash")).alias(
-                "hamming"
-            ),
-        )
-        .distinct()
-    )
-    return cand.where(F.col("hamming") <= max_hamming)
 
 
 def jaccard_pairs_exact(

@@ -66,12 +66,20 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .util import read_json_sidecar, write_json_sidecar
+from .util import Sidecar, atomic_append_subdir, swap_in_staged
 
-_CUTOFF_SIDECAR = "_gate_params.json"
-_CUTOFF_KEYS = ("strata_col", "score_col", "keep_pct")
-_LM_SIDECAR = "_lm_params.json"
-_LM_KEYS = ("lang_col", "lam")
+_CUTOFF_SIDECAR = Sidecar(
+    "_gate_params.json",
+    ("strata_col", "score_col", "keep_pct"),
+    "gate cutoff store",
+    "rebuild via write_gate_cutoffs",
+)
+_LM_SIDECAR = Sidecar(
+    "_lm_params.json",
+    ("lang_col", "lam"),
+    "frozen LM store",
+    "rebuild via write_lm_counts(mode='overwrite')",
+)
 
 #: unseen-unigram probability floor, as a count: p_floor = 0.5 / N.
 #: 0.5 "half an occurrence" is the classic continuity-correction
@@ -153,21 +161,14 @@ def write_gate_cutoffs(
         "keep_pct": int(keep_pct),
     }
     cutoffs.write.mode("overwrite").parquet(path)
-    write_json_sidecar(cutoffs.sparkSession, path, _CUTOFF_SIDECAR, params)
+    _CUTOFF_SIDECAR.write(cutoffs.sparkSession, path, params)
 
 
 def read_gate_cutoffs(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict]:
     """Load the cutoff table and its frozen parameters."""
-    params = read_json_sidecar(
-        spark,
-        path,
-        _CUTOFF_SIDECAR,
-        _CUTOFF_KEYS,
-        "gate cutoff store",
-        "rebuild via write_gate_cutoffs",
-    )
+    params = _CUTOFF_SIDECAR.read(spark, path)
     return spark.read.parquet(path), params
 
 
@@ -246,8 +247,12 @@ def _screen_cutoff_frame(
 # Binned (mergeable) gate cutoffs: build / merge / derive / screen / compact
 # ---------------------------------------------------------------------------
 
-_BINNED_SIDECAR = "_binned_gate_params.json"
-_BINNED_KEYS = ("strata_col", "score_col", "keep_pct", "n_bins")
+_BINNED_SIDECAR = Sidecar(
+    "_binned_gate_params.json",
+    ("strata_col", "score_col", "keep_pct", "n_bins"),
+    "binned cutoff store",
+    "rebuild via build_binned_cutoff_store",
+)
 
 
 def _binned_bin_expr(score, lo, hi, n_bins: int):
@@ -318,10 +323,9 @@ def build_binned_cutoff_store(
     ranges.write.mode("overwrite").parquet(base + "/ranges")
     counts = _binned_counts(spark, ref, base, strata_col, score_col, n_bins)
     counts.write.mode("overwrite").parquet(base + "/counts")
-    write_json_sidecar(
+    _BINNED_SIDECAR.write(
         spark,
         base,
-        _BINNED_SIDECAR,
         {
             "strata_col": str(strata_col),
             "score_col": str(score_col),
@@ -372,12 +376,7 @@ def merge_binned_cutoff_store(
     build never saw are dropped here (no frozen range) — the screen's
     ``unknown_strata`` policy decides their fate until an exact
     rebuild adds the stratum."""
-    from .util import atomic_append_subdir
-
-    params = read_json_sidecar(
-        spark, path, _BINNED_SIDECAR, _BINNED_KEYS,
-        "binned cutoff store", "rebuild via build_binned_cutoff_store",
-    )
+    params = _BINNED_SIDECAR.read(spark, path)
     counts = _binned_counts(
         spark, batch, path.rstrip("/"),
         params["strata_col"], params["score_col"], int(params["n_bins"]),
@@ -398,10 +397,7 @@ def derive_binned_cutoffs(spark: SparkSession, path: str) -> DataFrame:
     rebuild). An all-NULL stratum derives a NULL cutoff — the screen
     maps it to keep=False, the exact-store contract. Everything here
     is strata×bins-sized; the corpus is never touched."""
-    params = read_json_sidecar(
-        spark, path, _BINNED_SIDECAR, _BINNED_KEYS,
-        "binned cutoff store", "rebuild via build_binned_cutoff_store",
-    )
+    params = _BINNED_SIDECAR.read(spark, path)
     pct, n_bins = int(params["keep_pct"]), int(params["n_bins"])
     base = path.rstrip("/")
     counts = (
@@ -490,10 +486,7 @@ def screen_against_binned_cutoffs(
     work, zero corpus recompute), then the EXACT store's screen
     semantics verbatim (shared :func:`_screen_cutoff_frame` — ties
     inclusive, NULL scores never keep, unknown strata by policy)."""
-    params = read_json_sidecar(
-        spark, path, _BINNED_SIDECAR, _BINNED_KEYS,
-        "binned cutoff store", "rebuild via build_binned_cutoff_store",
-    )
+    params = _BINNED_SIDECAR.read(spark, path)
     cuts = derive_binned_cutoffs(spark, path).withColumnRenamed(
         "strata", params["strata_col"]
     )
@@ -536,10 +529,7 @@ def calibrate_binned_cutoffs(
     ``abs_gap``/``gap_bins`` are 6dp-rounded (the cross-engine float
     contract); both-sides-NULL cutoffs (all-NULL-score strata) report
     a NULL gap and no rebuild — no scores means nothing drifted."""
-    params = read_json_sidecar(
-        spark, path, _BINNED_SIDECAR, _BINNED_KEYS,
-        "binned cutoff store", "rebuild via build_binned_cutoff_store",
-    )
+    params = _BINNED_SIDECAR.read(spark, path)
     strata_col = params["strata_col"]
     n_bins = int(params["n_bins"])
     binned = derive_binned_cutoffs(spark, path).select(
@@ -599,15 +589,10 @@ def calibrate_binned_cutoffs(
 def compact_binned_cutoff_store(spark: SparkSession, path: str) -> int:
     """Rewrite the counts table as one row per (strata, bin) — the
     same group-sum derive_binned_cutoffs folds lazily, so cutoffs are
-    unchanged by construction. Crash-atomic staged swap (the
-    compact_lm_counts device); SINGLE WRITER REQUIRED. Returns the
+    unchanged by construction. Crash-atomic staged swap
+    (:func:`util.swap_in_staged`); SINGLE WRITER REQUIRED. Returns the
     compacted row count."""
-    from .util import hadoop_path_and_fs
-
-    read_json_sidecar(
-        spark, path, _BINNED_SIDECAR, _BINNED_KEYS,
-        "binned cutoff store", "rebuild via build_binned_cutoff_store",
-    )
+    _BINNED_SIDECAR.read(spark, path)
     base = path.rstrip("/") + "/counts"
     staged = base + ".compact"
     merged = (
@@ -618,16 +603,7 @@ def compact_binned_cutoff_store(spark: SparkSession, path: str) -> int:
     )
     merged.write.mode("overwrite").parquet(staged)
     n = spark.read.parquet(staged).count()
-    cur, fs = hadoop_path_and_fs(spark, base)
-    new, _ = hadoop_path_and_fs(spark, staged)
-    old, _ = hadoop_path_and_fs(spark, base + ".old")
-    fs.delete(old, True)
-    if not fs.rename(cur, old):
-        raise IOError(f"binned cutoff compaction: could not stage out {base}")
-    if not fs.rename(new, cur):
-        fs.rename(old, cur)
-        raise IOError(f"binned cutoff compaction: could not swap in {staged}")
-    fs.delete(old, True)
+    swap_in_staged(spark, base, "binned cutoff compaction")
     return int(n)
 
 
@@ -718,17 +694,11 @@ def write_lm_counts(
     scoring the same store under drifting interpolation weights
     would silently change every historical keep decision.
 
-    Appends are CRASH-ATOMIC (r14 ADVICE fix): the batch's count
-    rows are written to a staging directory OUTSIDE the store, then
-    committed with a single filesystem rename into the store as a
-    ``batch-*`` subdirectory — the read side lists recursively. A
-    job that dies mid-write leaves only an orphaned staging dir the
-    store never reads; count magnitudes are additive, so a silently
-    half-committed batch would have skewed every frozen score
-    forever (unlike the idempotent membership stores, where a
-    partial append merely under-screens until retry). Mirrors
-    :func:`compact_lm_counts`'s staged swap; same single-writer
-    caveat for concurrent compaction."""
+    Appends are CRASH-ATOMIC (:func:`util.atomic_append_subdir`: one
+    rename commits the batch as a ``batch-*`` subdirectory; the read
+    side lists recursively) — count magnitudes are additive, so a
+    half-committed batch would skew every frozen score. Same
+    single-writer caveat as :func:`compact_lm_counts`."""
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be overwrite|append, got {mode!r}")
     if not 0 <= lam <= 1:
@@ -736,26 +706,11 @@ def write_lm_counts(
     spark = counts.sparkSession
     params = {"lang_col": str(lang_col), "lam": float(lam)}
     if mode == "append":
-        stored = read_json_sidecar(
-            spark,
-            path,
-            _LM_SIDECAR,
-            _LM_KEYS,
-            "frozen LM store",
-            "rebuild via write_lm_counts(mode='overwrite')",
-        )
-        got = {k: stored[k] for k in _LM_KEYS}
-        if got != params:
-            raise ValueError(
-                f"frozen LM store at {path} was built with {got}; "
-                f"refusing to append rows built with {params}"
-            )
-        from .util import atomic_append_subdir
-
+        _LM_SIDECAR.check_append(spark, path, params)
         atomic_append_subdir(counts, path, "lm append")
         return
     counts.write.mode("overwrite").parquet(path)
-    write_json_sidecar(spark, path, _LM_SIDECAR, params)
+    _LM_SIDECAR.write(spark, path, params)
 
 
 def merge_lm_counts(
@@ -770,14 +725,7 @@ def merge_lm_counts(
     the STORED parameters and append — O(batch), the stored rows are
     never read (the q163 merge contract; n-gram counts are additive,
     so batch granularity is free and order-independent)."""
-    stored = read_json_sidecar(
-        spark,
-        path,
-        _LM_SIDECAR,
-        _LM_KEYS,
-        "frozen LM store",
-        "rebuild via write_lm_counts(mode='overwrite')",
-    )
+    stored = _LM_SIDECAR.read(spark, path)
     lc = lang_col if lang_col is not None else stored["lang_col"]
     counts = build_lm_counts(batch, id_col, text_col, lc)
     write_lm_counts(
@@ -792,21 +740,10 @@ def merge_lm_counts(
 def compact_lm_counts(spark: SparkSession, path: str) -> int:
     """Rewrite the LM store as one row per (lang, w1, w2) — the same
     group-sum the scorer folds lazily, so scores are unchanged by
-    construction (addition is associative). Crash-atomic staged swap,
-    the :func:`sketches.compact_cardinality_sketches` device
-    verbatim; SINGLE WRITER REQUIRED (a concurrent merge's append
-    between the staged read and the swap lands in ``.old`` and is
-    deleted). Returns the compacted row count."""
-    from .util import hadoop_path_and_fs
-
-    stored = read_json_sidecar(
-        spark,
-        path,
-        _LM_SIDECAR,
-        _LM_KEYS,
-        "frozen LM store",
-        "rebuild via write_lm_counts(mode='overwrite')",
-    )
+    construction (addition is associative). Crash-atomic staged swap
+    (:func:`util.swap_in_staged`); SINGLE WRITER REQUIRED. Returns
+    the compacted row count."""
+    stored = _LM_SIDECAR.read(spark, path)
     base = path.rstrip("/")
     staged = base + ".compact"
     merged = (
@@ -819,17 +756,8 @@ def compact_lm_counts(spark: SparkSession, path: str) -> int:
     )
     merged.write.mode("overwrite").parquet(staged)
     n = spark.read.parquet(staged).count()
-    write_json_sidecar(spark, staged, _LM_SIDECAR, stored)
-    cur, fs = hadoop_path_and_fs(spark, base)
-    new, _ = hadoop_path_and_fs(spark, staged)
-    old, _ = hadoop_path_and_fs(spark, base + ".old")
-    fs.delete(old, True)
-    if not fs.rename(cur, old):
-        raise IOError(f"lm compaction: could not stage out {base}")
-    if not fs.rename(new, cur):
-        fs.rename(old, cur)
-        raise IOError(f"lm compaction: could not swap in {staged}")
-    fs.delete(old, True)
+    _LM_SIDECAR.write(spark, staged, stored)
+    swap_in_staged(spark, base, "lm compaction")
     return int(n)
 
 
@@ -867,14 +795,7 @@ def score_with_frozen_lm(
     per-language totals ride a lang-count-sized frame. A language
     with no stored counts scores NULL (joins all miss), which a
     downstream gate maps to keep=False."""
-    stored = read_json_sidecar(
-        spark,
-        path,
-        _LM_SIDECAR,
-        _LM_KEYS,
-        "frozen LM store",
-        "rebuild via write_lm_counts(mode='overwrite')",
-    )
+    stored = _LM_SIDECAR.read(spark, path)
     lam = float(stored["lam"])
     if counts is None:
         counts = (
@@ -996,8 +917,12 @@ def score_with_frozen_lm(
 # reference distribution)
 # ---------------------------------------------------------------------------
 
-_BASELINE_SIDECAR = "_baseline_params.json"
-_BASELINE_KEYS = ("cat_cols", "num_cols", "n_bins", "min_share")
+_BASELINE_SIDECAR = Sidecar(
+    "_baseline_params.json",
+    ("cat_cols", "num_cols", "n_bins", "min_share"),
+    "drift baseline store",
+    "rebuild via build_drift_baseline",
+)
 
 
 def _bin_expr(col: str, edges: list[float]):
@@ -1102,10 +1027,9 @@ def build_drift_baseline(
         )
     table = reduce(lambda a, b: a.unionByName(b), parts)
     table.write.mode("overwrite").parquet(path)
-    write_json_sidecar(
+    _BASELINE_SIDECAR.write(
         table.sparkSession,
         path,
-        _BASELINE_SIDECAR,
         {
             "cat_cols": cat_cols,
             "num_cols": num_cols,
@@ -1132,14 +1056,7 @@ def psi_against_baseline(
     float contract)."""
     from functools import reduce
 
-    params = read_json_sidecar(
-        spark,
-        path,
-        _BASELINE_SIDECAR,
-        _BASELINE_KEYS,
-        "drift baseline store",
-        "rebuild via build_drift_baseline",
-    )
+    params = _BASELINE_SIDECAR.read(spark, path)
     ms = float(params["min_share"])
     stored = spark.read.parquet(path).localCheckpoint()
     outs = []

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import ensure_parallelism
+from .util import Sidecar, ensure_parallelism
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -44,25 +44,6 @@ def _norm(a: Column) -> Column:
     return F.greatest(
         F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)),
         F.lit(1e-12),
-    )
-
-
-def with_normalized(
-    df: DataFrame, vec_col: str, out_col: str = "unit_vec"
-) -> DataFrame:
-    """Attach an L2-normalized copy (double precision) of the embedding.
-
-    The norm is computed once per row into a real column and the divide
-    references that column — embedding ``_norm`` inside the per-element
-    lambda would re-run the whole-vector fold per component (O(d²)/row;
-    higher-order functions are interpreted, no common-subexpression
-    elimination saves you).
-    """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    return (
-        df.withColumn("__l2", _norm(v))
-        .withColumn(out_col, F.transform(v, lambda x: x / F.col("__l2")))
-        .drop("__l2")
     )
 
 
@@ -1534,32 +1515,17 @@ def hard_negatives(
     )
 
 
-#: sidecar filename for stored IVF indexes — carries the FROZEN
-#: quantizer (the trained centroids) plus its provenance, so merges
-#: assign under the index's own centroids and a mismatched-quantizer
-#: append is unconstructible (the dedup-index sidecar contract,
-#: dedup.py:617, applied to ANN).
-IVF_INDEX_SIDECAR = "_ivf_index_params.json"
-
-
-def _write_ivf_sidecar(spark, path: str, params: dict) -> None:
-    from .util import write_json_sidecar
-
-    write_json_sidecar(spark, path, IVF_INDEX_SIDECAR, params)
-
-
-def _read_ivf_sidecar(spark, path: str) -> dict:
-    from .util import read_json_sidecar
-
-    return read_json_sidecar(
-        spark,
-        path,
-        IVF_INDEX_SIDECAR,
-        {"num_lists", "train_rounds", "centroids"},
-        "IVF index",
-        "an index without its frozen quantizer cannot be merged "
-        "into or searched safely; rebuild via write_ivf_index",
-    )
+#: sidecar of stored IVF indexes — carries the FROZEN quantizer (the
+#: trained centroids) plus its provenance, so merges assign under the
+#: index's own centroids and a mismatched-quantizer append is
+#: unconstructible (the dedup-index sidecar contract applied to ANN).
+IVF_INDEX_SIDECAR = Sidecar(
+    "_ivf_index_params.json",
+    ("num_lists", "train_rounds", "centroids"),
+    "IVF index",
+    "an index without its frozen quantizer cannot be merged "
+    "into or searched safely; rebuild via write_ivf_index",
+)
 
 
 def _ivf_rows(
@@ -1638,7 +1604,7 @@ def write_ivf_index(
     rows.write.mode("overwrite").parquet(path)
     # sidecar AFTER the data lands (write_dedup_index ordering): a
     # failed data write never leaves a sidecar pointing at nothing
-    _write_ivf_sidecar(
+    IVF_INDEX_SIDECAR.write(
         spark,
         path,
         {
@@ -1663,7 +1629,7 @@ def merge_ivf_index(
     batch: one assignment pass over the batch + an O(batch) parquet
     append; the corpus-sized existing rows are never read (the
     merge_dedup_index shape). Returns the sidecar params."""
-    params = _read_ivf_sidecar(spark, path)
+    params = IVF_INDEX_SIDECAR.read(spark, path)
     rows = _ivf_rows(batch, id_col, vec_col, params["centroids"])
     rows.write.mode("append").parquet(path)
     return params
@@ -1693,7 +1659,7 @@ def search_ivf_index(
     assumed disjoint — a double query id 5.0 does not exclude a
     stored string "5" (normalize to one type before indexing if a
     mixed deployment must self-match)."""
-    params = _read_ivf_sidecar(spark, path)
+    params = IVF_INDEX_SIDECAR.read(spark, path)
     ctr = F.broadcast(
         spark.createDataFrame(
             [(i, c) for i, c in enumerate(params["centroids"])],
@@ -1805,7 +1771,7 @@ def calibrate_ivf_index(
     corpus-scale term is the exact brute-force truth pass — which is
     the point: run this periodically (the q177 cadence), never per
     batch."""
-    params = _read_ivf_sidecar(spark, path)
+    params = IVF_INDEX_SIDECAR.read(spark, path)
     num_lists = int(params["num_lists"])
     occ = (
         spark.read.parquet(path)
@@ -1873,8 +1839,13 @@ def calibrate_ivf_index(
     )
 
 
-_PQ_SIDECAR = "_pq_ivf_params.json"
-_PQ_KEYS = ("num_lists", "m", "ksub", "centroids", "codebooks")
+_PQ_SIDECAR = Sidecar(
+    "_pq_ivf_params.json",
+    ("num_lists", "m", "ksub", "centroids", "codebooks"),
+    "PQ-IVF index",
+    "an index without its frozen quantizers cannot be merged "
+    "into or searched safely; rebuild via write_pq_ivf_index",
+)
 
 
 def _pq_codes_expr(vec: Column, dim: int, codebooks) -> Column:
@@ -2337,12 +2308,9 @@ def write_pq_ivf_index(
             )
     rows = _pq_rows(corpus, id_col, vec_col, cents, dim, codebooks)
     rows.write.mode("overwrite").parquet(path)
-    from .util import write_json_sidecar
-
-    write_json_sidecar(
+    _PQ_SIDECAR.write(
         spark,
         path,
-        _PQ_SIDECAR,
         {
             "num_lists": int(num_lists),
             "m": int(m),
@@ -2356,20 +2324,6 @@ def write_pq_ivf_index(
     return {"centroids": cents, "codebooks": codebooks, "dim": dim}
 
 
-def _read_pq_sidecar(spark, path: str) -> dict:
-    from .util import read_json_sidecar
-
-    return read_json_sidecar(
-        spark,
-        path,
-        _PQ_SIDECAR,
-        _PQ_KEYS,
-        "PQ-IVF index",
-        "an index without its frozen quantizers cannot be merged "
-        "into or searched safely; rebuild via write_pq_ivf_index",
-    )
-
-
 def merge_pq_ivf_index(
     spark,
     path: str,
@@ -2381,7 +2335,7 @@ def merge_pq_ivf_index(
     the index's OWN frozen coarse centroids and sub-codebooks, append
     O(batch) — the merge_ivf_index shape, codes instead of raw
     vectors."""
-    params = _read_pq_sidecar(spark, path)
+    params = _PQ_SIDECAR.read(spark, path)
     codebooks = params["codebooks"]
     dim = len(codebooks) * len(codebooks[0][0])
     rows = _pq_rows(
@@ -2409,7 +2363,7 @@ def _pq_adc_scored(
     candidate work is ~|index|·nprobe/num_lists code rows per query;
     expressions are kept byte-identical to the pre-refactor
     search_pq_ivf_index body so its certified plan is unchanged."""
-    params = _read_pq_sidecar(spark, path)
+    params = _PQ_SIDECAR.read(spark, path)
     codebooks = params["codebooks"]
     m, ksub = len(codebooks), len(codebooks[0])
     ctr = F.broadcast(
@@ -2666,7 +2620,7 @@ def calibrate_pq_ivf_index(
     Cost shape is q180's: store side list-count-sized, searches
     probe-pruned + shortlist-rescored, the one corpus-scale term is
     the brute-force truth pass — run periodically."""
-    params = _read_pq_sidecar(spark, path)
+    params = _PQ_SIDECAR.read(spark, path)
     num_lists = int(params["num_lists"])
     occ = (
         spark.read.parquet(path)

@@ -28,10 +28,14 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .util import read_json_sidecar, write_json_sidecar
+from .util import Sidecar, swap_in_staged
 
-_SIDECAR = "_hll_params.json"
-_PARAM_KEYS = ("lg_k", "group_cols", "value_col")
+HLL_SIDECAR = Sidecar(
+    "_hll_params.json",
+    ("lg_k", "group_cols", "value_col"),
+    "hll sketch store",
+    "rebuild via write_cardinality_sketches(mode='overwrite')",
+)
 
 
 def build_cardinality_sketches(
@@ -72,23 +76,10 @@ def write_cardinality_sketches(
         "value_col": str(value_col),
     }
     if mode == "append":
-        stored = read_json_sidecar(
-            spark,
-            path,
-            _SIDECAR,
-            _PARAM_KEYS,
-            "hll sketch store",
-            "rebuild via write_cardinality_sketches(mode='overwrite')",
-        )
-        got = {k: stored[k] for k in _PARAM_KEYS}
-        if got != params:
-            raise ValueError(
-                f"hll sketch store at {path} was built with {got}; "
-                f"refusing to append rows built with {params}"
-            )
+        HLL_SIDECAR.check_append(spark, path, params)
     sketches.write.mode(mode).parquet(path)
     if mode == "overwrite":
-        write_json_sidecar(spark, path, _SIDECAR, params)
+        HLL_SIDECAR.write(spark, path, params)
 
 
 def merge_cardinality_sketches(
@@ -102,14 +93,7 @@ def merge_cardinality_sketches(
     parameters and append — the stored registers are never read;
     re-unioning happens lazily at estimate time (HLL union is
     associative and commutative, so batch granularity is free)."""
-    stored = read_json_sidecar(
-        spark,
-        path,
-        _SIDECAR,
-        _PARAM_KEYS,
-        "hll sketch store",
-        "rebuild via write_cardinality_sketches(mode='overwrite')",
-    )
+    stored = HLL_SIDECAR.read(spark, path)
     sk = build_cardinality_sketches(
         batch, group_cols, value_col, lg_k=int(stored["lg_k"])
     )
@@ -131,14 +115,7 @@ def estimate_cardinality(
     group-keyed union-merge, one estimate per group. Returns
     ``(group..., estimate, n_rows)`` with ``n_rows`` the audit row
     total across batches."""
-    read_json_sidecar(
-        spark,
-        path,
-        _SIDECAR,
-        _PARAM_KEYS,
-        "hll sketch store",
-        "rebuild via write_cardinality_sketches(mode='overwrite')",
-    )
+    HLL_SIDECAR.read(spark, path)
     stored = spark.read.parquet(path)
     return stored.groupBy(*group_cols).agg(
         F.hll_sketch_estimate(F.hll_union_agg("sketch")).alias("estimate"),
@@ -155,27 +132,10 @@ def compact_cardinality_sketches(spark: SparkSession, path: str) -> int:
     union is associative, commutative and idempotent, so pre-merging
     batches is exactly the estimator's own fold.
 
-    Crash-atomic staged swap, the :func:`textops.
-    compact_substring_index` device verbatim: write the compacted
-    generation to ``<path>.compact``, copy the sidecar, then two
-    renames (live → ``.old``, staged → live). A crash between
-    renames leaves both complete generations on disk; rename either
-    back to recover. SINGLE WRITER REQUIRED — a concurrent
-    :func:`merge_cardinality_sketches` appending between the staged
-    read and the first rename writes into what becomes ``.old`` and
-    is deleted after the swap; serialize merges and compactions
-    through one writer. Returns the compacted row (group) count.
+    Crash-atomic staged swap (:func:`util.swap_in_staged`); SINGLE
+    WRITER REQUIRED. Returns the compacted row (group) count.
     """
-    from .util import hadoop_path_and_fs
-
-    stored_params = read_json_sidecar(
-        spark,
-        path,
-        _SIDECAR,
-        _PARAM_KEYS,
-        "hll sketch store",
-        "rebuild via write_cardinality_sketches(mode='overwrite')",
-    )
+    stored_params = HLL_SIDECAR.read(spark, path)
     base = path.rstrip("/")
     staged = base + ".compact"
     group_cols = list(stored_params["group_cols"])
@@ -189,15 +149,6 @@ def compact_cardinality_sketches(spark: SparkSession, path: str) -> int:
     )
     merged.write.mode("overwrite").parquet(staged)
     n = spark.read.parquet(staged).count()
-    write_json_sidecar(spark, staged, _SIDECAR, stored_params)
-    cur, fs = hadoop_path_and_fs(spark, base)
-    new, _ = hadoop_path_and_fs(spark, staged)
-    old, _ = hadoop_path_and_fs(spark, base + ".old")
-    fs.delete(old, True)
-    if not fs.rename(cur, old):
-        raise IOError(f"hll compaction: could not stage out {base}")
-    if not fs.rename(new, cur):
-        fs.rename(old, cur)
-        raise IOError(f"hll compaction: could not swap in {staged}")
-    fs.delete(old, True)
+    HLL_SIDECAR.write(spark, staged, stored_params)
+    swap_in_staged(spark, base, "hll compaction")
     return int(n)

@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import whitespace_tokens
-from .util import ensure_parallelism
+from .util import Sidecar, ensure_parallelism, swap_in_staged
 
 #: Tiny English function-word list for the n-gram/stopword heuristic.
 EN_STOPWORDS = (
@@ -2110,7 +2110,13 @@ def chunk_documents(
     )
 
 
-_SUBSTR_INDEX_SIDECAR = "_substring_index_params.json"
+_SUBSTR_INDEX_SIDECAR = Sidecar(
+    "_substring_index_params.json",
+    ("min_len",),
+    "substring index",
+    "an index screened under a different min_len silently misses "
+    "spans; rebuild via write_substring_index",
+)
 
 
 def _window_fingerprints(
@@ -2140,27 +2146,6 @@ def _window_fingerprints(
         F.col(text_col),
         F.explode(starts).alias("i"),
     ).select(id_col, "i", k.alias("__k"))
-
-
-def _substr_sidecar_io(spark, path: str, params: dict | None):
-    """Write (params given) or read+validate (params None) the
-    substring index's parameter sidecar — delegates to the shared
-    stored-artifact helpers in util.py (one sidecar implementation
-    across the dedup/IVF/substring lifecycles)."""
-    from .util import read_json_sidecar, write_json_sidecar
-
-    if params is not None:
-        write_json_sidecar(spark, path, _SUBSTR_INDEX_SIDECAR, params)
-        return params
-    return read_json_sidecar(
-        spark,
-        path,
-        _SUBSTR_INDEX_SIDECAR,
-        {"min_len"},
-        "substring index",
-        "an index screened under a different min_len silently misses "
-        "spans; rebuild via write_substring_index",
-    )
 
 
 def write_substring_index(
@@ -2206,7 +2191,7 @@ def write_substring_index(
     # are the log-structured maintenance counters merge_ uses to
     # self-trigger compaction (n_rows = rows at last full rewrite,
     # appended_rows = blind-append rows since).
-    _substr_sidecar_io(
+    _SUBSTR_INDEX_SIDECAR.write(
         spark,
         path,
         {
@@ -2245,20 +2230,15 @@ def merge_substring_index(
     (the manual log-structured trade). A legacy sidecar without the
     counters compacts on the first merge, which seeds them.
 
-    SINGLE WRITER REQUIRED: merges and compactions assume one ingest
-    loop owns the index. A concurrent merge that appends between a
-    compaction's staged distinct-read and its first rename lands its
-    batch in ``<path>.old`` and is deleted with it — silent
-    fingerprint loss (later screens miss real duplicates). Concurrent
-    SCREENS are safe at every point; concurrent WRITERS must be
-    serialized externally (one queue, or a lock/lease service) —
-    self-triggering compaction makes an unsupervised multi-writer
-    loop the likely misuse, so it is called out here and in
-    :func:`compact_substring_index`.
+    SINGLE WRITER REQUIRED (:func:`util.swap_in_staged`): a merge
+    that runs during a compaction silently loses its fingerprints.
+    Concurrent SCREENS are safe at every point; self-triggering
+    compaction makes an unsupervised multi-writer loop the likely
+    misuse, so serialize writers externally (one queue, or a lease).
 
     Returns the sidecar parameters as of AFTER this merge (counters
     reset when compaction fired)."""
-    params = _substr_sidecar_io(spark, path, None)
+    params = _SUBSTR_INDEX_SIDECAR.read(spark, path)
     fps = (
         _window_fingerprints(
             batch,
@@ -2287,7 +2267,7 @@ def merge_substring_index(
     # compaction below dies, the on-disk state (appended files +
     # updated counters) is exactly consistent and the next merge
     # re-triggers it
-    _substr_sidecar_io(spark, path, params)
+    _SUBSTR_INDEX_SIDECAR.write(spark, path, params)
     if (
         auto_compact_ratio is not None
         and params["appended_rows"]
@@ -2320,7 +2300,7 @@ def screen_against_substring_index(
     shuffle, corpus read pruned to the join. The streaming
     composition (foreachBatch: screen → gate → merge) is pinned in
     tests/test_streaming.py."""
-    params = _substr_sidecar_io(spark, path, None)
+    params = _SUBSTR_INDEX_SIDECAR.read(spark, path)
     L = int(params["min_len"])
     occ = _window_fingerprints(
         batch, id_col, text_col, L, params.get("base_hash", "xxhash64")
@@ -2360,37 +2340,13 @@ def compact_substring_index(spark, path: str) -> int:
     One distinct + one rewrite over the INDEX (never the corpus
     text). Returns the compacted fingerprint count.
 
-    CRASH-ATOMIC: the distinct set is staged to a sibling
-    ``<path>.compact`` directory — sidecar included, so the staged
-    artifact is complete BEFORE any swap — then swapped in via two
-    filesystem renames (``path`` → ``<path>.old``, staged → ``path``)
-    and the old generation deleted. The live index directory is never
-    written in place (the previous implementation overwrote the very
-    directory it was reading, fenced only by localCheckpoint blocks,
-    which are not fault-tolerant — an executor loss mid-overwrite
-    destroyed the artifact). Crash exposure now: a failure before the
-    first rename leaves the live index untouched (a stale
-    ``.compact`` is overwritten by the next attempt); between the two
-    renames ``path`` briefly does not exist — concurrent screens
-    fail-safe (no sidecar) and BOTH complete generations remain on
-    disk (rename ``<path>.old`` back, or ``<path>.compact`` in, to
-    recover); after the second rename the new generation is live and
-    ``<path>.old`` is garbage. On object stores without atomic
-    rename (raw S3) front this with a committer, as for any
-    rename-based swap.
-
-    SINGLE WRITER REQUIRED: crash-atomicity covers crashes and
-    concurrent screens, not concurrent writers. A
-    :func:`merge_substring_index` that appends to ``path`` between
-    this function's staged distinct-read and the first rename writes
-    into what becomes ``<path>.old`` — deleted after the swap, losing
-    that batch's fingerprints silently. Serialize all merges and
-    compactions through one writer (self-triggering compaction inside
-    ``merge_substring_index`` already does, for a single ingest
-    loop)."""
-    from .util import hadoop_path_and_fs
-
-    params = _substr_sidecar_io(spark, path, None)
+    Crash-atomic and SINGLE WRITER REQUIRED: the distinct set and its
+    sidecar are staged to ``<path>.compact`` and swapped in by
+    :func:`util.swap_in_staged` (crash windows and the writer contract
+    are documented there; self-triggering compaction inside
+    :func:`merge_substring_index` serializes itself for a single
+    ingest loop)."""
+    params = _SUBSTR_INDEX_SIDECAR.read(spark, path)
     base = path.rstrip("/")
     staged = base + ".compact"
     # reads the live directory, writes the sibling — no in-place
@@ -2398,21 +2354,12 @@ def compact_substring_index(spark, path: str) -> int:
     fps = spark.read.parquet(base).select("__k").distinct()
     fps.write.mode("overwrite").parquet(staged)
     n = spark.read.parquet(staged).count()  # parquet-footer count
-    _substr_sidecar_io(
+    _SUBSTR_INDEX_SIDECAR.write(
         spark,
         staged,
         {**params, "n_rows": int(n), "appended_rows": 0},
     )
-    cur, fs = hadoop_path_and_fs(spark, base)
-    new, _ = hadoop_path_and_fs(spark, staged)
-    old, _ = hadoop_path_and_fs(spark, base + ".old")
-    fs.delete(old, True)
-    if not fs.rename(cur, old):
-        raise IOError(f"compaction: could not stage out {base}")
-    if not fs.rename(new, cur):
-        fs.rename(old, cur)  # restore the previous generation
-        raise IOError(f"compaction: could not swap in {staged}")
-    fs.delete(old, True)
+    swap_in_staged(spark, base, "compaction")
     return n
 
 

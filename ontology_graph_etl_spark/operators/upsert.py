@@ -45,20 +45,6 @@ def first_wins(
     )
 
 
-def last_wins(
-    df: DataFrame, keys: Sequence[str], order_col: str | Sequence[str]
-) -> DataFrame:
-    """Last-wins variant (``MERGE ... SET`` semantics): highest order wins."""
-    w = Window.partitionBy(*keys).orderBy(
-        *[F.col(c).desc() for c in _order_cols(order_col)]
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def update_by_key(
     base: DataFrame,
     updates: DataFrame,
@@ -185,8 +171,7 @@ def apply_cdc_batch(
     batch exchanges, on its key. The batch lineage forks into two
     batch-sized scans (key list + upsert rows) — accepted because it
     is batch-sized, not corpus-sized (the round-5 fork rule's scope).
-    For stored tables compose with the staged-swap write device —
-    tests/test_streaming.py pins the foreachBatch lifecycle.
+    For a parquet-stored target use :func:`apply_cdc_to_store`.
     """
     keys = list(key_cols)
     order = _order_cols(order_col)
@@ -236,28 +221,21 @@ def apply_cdc_to_store(
     order_col: str | Sequence[str],
     op_col: str = "op",
 ) -> None:
-    """Apply a CDC batch to a parquet-stored table in place, via the
-    crash-atomic staged-swap device (read live → apply → write
-    sibling ``.staged`` → two renames): a reader mid-swap sees one
-    complete generation or the other, never a partial write, and a
-    crash leaves both generations recoverable by rename. SINGLE
-    WRITER REQUIRED (the compact_substring_index contract). This is
-    the foreachBatch body for a streaming CDC-apply pipeline —
-    pinned in tests/test_streaming.py."""
-    from .util import hadoop_path_and_fs
+    """Apply a CDC batch to a parquet-stored table in place: read the
+    live table, apply the batch, write the result to the sibling
+    ``<path>.compact`` and swap it in with :func:`util.swap_in_staged`
+    — the staged swap every store rewrite shares (a reader mid-swap
+    sees one complete generation or the other, never a partial
+    write; crash windows are documented there). SINGLE WRITER
+    REQUIRED. The staging suffix is ``.compact``, as for every other
+    store; earlier versions staged at ``<path>.staged``, and a
+    leftover of that name is never read and can be deleted. This is
+    the foreachBatch body for a streaming CDC-apply pipeline — pinned
+    in tests/test_streaming.py."""
+    from .util import swap_in_staged
 
     base = path.rstrip("/")
-    staged = base + ".staged"
     cur_df = spark.read.parquet(base)
     out = apply_cdc_batch(cur_df, cdc, key_cols, order_col, op_col)
-    out.write.mode("overwrite").parquet(staged)
-    cur, fs = hadoop_path_and_fs(spark, base)
-    new, _ = hadoop_path_and_fs(spark, staged)
-    old, _ = hadoop_path_and_fs(spark, base + ".old")
-    fs.delete(old, True)
-    if not fs.rename(cur, old):
-        raise IOError(f"cdc apply: could not stage out {base}")
-    if not fs.rename(new, cur):
-        fs.rename(old, cur)
-        raise IOError(f"cdc apply: could not swap in {staged}")
-    fs.delete(old, True)
+    out.write.mode("overwrite").parquet(base + ".compact")
+    swap_in_staged(spark, base, "cdc apply")

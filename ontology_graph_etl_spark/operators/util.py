@@ -1,7 +1,12 @@
-"""Shared operator plumbing."""
+"""Shared operator plumbing, including the stored-artifact layer every
+store lifecycle uses (Sidecar, atomic_append_subdir, swap_in_staged)."""
 
 from __future__ import annotations
 
+import json
+from dataclasses import dataclass
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, DateType, TimestampNTZType, TimestampType
@@ -93,20 +98,72 @@ def hadoop_path_and_fs(spark, path: str):
     return hpath, fs
 
 
-def write_json_sidecar(spark, path: str, filename: str, params: dict) -> None:
-    """Write a stored-artifact parameter sidecar (one JSON file inside
-    the artifact directory) — THE sidecar implementation shared by the
-    dedup-index, IVF-index, and substring-index lifecycles, so fixes
-    (encoding, atomicity, retries) land once instead of drifting
-    across three copies."""
-    import json
+@dataclass(frozen=True)
+class Sidecar:
+    """A stored artifact's parameter sidecar: one JSON file inside the
+    artifact directory, so the parameters travel with the data through
+    copies and renames. One frozen spec per store — ``filename`` (an
+    underscore prefix keeps Spark's parquet listing away from it),
+    the ``keys`` a reader requires, the store's name (``what``) and
+    its rebuild ``hint`` — and THE one implementation of sidecar I/O
+    and append validation across every stored lifecycle."""
 
-    hpath, fs = hadoop_path_and_fs(spark, f"{path.rstrip('/')}/{filename}")
-    out = fs.create(hpath, True)
-    try:
-        out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
-    finally:
-        out.close()
+    filename: str
+    keys: tuple[str, ...]
+    what: str
+    hint: str
+
+    def _locate(self, spark, path: str):
+        return hadoop_path_and_fs(
+            spark, f"{path.rstrip('/')}/{self.filename}"
+        )
+
+    def write(self, spark, path: str, params: dict) -> None:
+        """(Over)write the sidecar as sorted-key JSON."""
+        hpath, fs = self._locate(spark, path)
+        out = fs.create(hpath, True)
+        try:
+            out.write(bytearray(json.dumps(params, sort_keys=True).encode()))
+        finally:
+            out.close()
+
+    def read(self, spark, path: str) -> dict:
+        """Read and validate the sidecar. Raises ValueError with the
+        store's rebuild hint when it is absent or missing keys."""
+        hpath, fs = self._locate(spark, path)
+        if not fs.exists(hpath):
+            raise ValueError(
+                f"{self.what} at {path} has no {self.filename} sidecar "
+                f"— {self.hint}"
+            )
+        stream = fs.open(hpath)
+        try:
+            raw = bytes(
+                spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
+            )
+        finally:
+            stream.close()
+        params = json.loads(raw.decode("utf-8"))
+        missing = set(self.keys) - set(params)
+        if missing:
+            raise ValueError(
+                f"{self.what} sidecar at {path} is missing keys: "
+                f"{sorted(missing)}"
+            )
+        return params
+
+    def check_append(self, spark, path: str, params: dict) -> None:
+        """Refuse an append whose parameters differ from the stored
+        ones: rows built under other parameters (permutation
+        constants, register width, interpolation weight) poison the
+        store silently, so a mismatch fails loudly instead."""
+        stored = self.read(spark, path)
+        got = {k: stored[k] for k in self.keys}
+        if got != params:
+            raise ValueError(
+                f"{self.what} at {path} was built with {got}; "
+                f"refusing to append rows built with {params}"
+            )
 
 
 def atomic_append_subdir(df: DataFrame, base: str, what: str) -> None:
@@ -119,8 +176,8 @@ def atomic_append_subdir(df: DataFrame, base: str, what: str) -> None:
     ADDITIVE stores (count tables, histogram bins), where a silently
     half-committed batch skews every later read; for idempotent
     membership stores a flat append merely under-screens until retry.
-    Shared by the LM count store and the binned cutoff store (the r14
-    ADVICE fix, factored)."""
+    Shared by the LM count store, the binned cutoff store and the URL
+    index."""
     from uuid import uuid4
 
     spark = df.sparkSession
@@ -135,35 +192,50 @@ def atomic_append_subdir(df: DataFrame, base: str, what: str) -> None:
         raise IOError(f"{what}: could not commit staged batch into {b}")
 
 
-def read_json_sidecar(
-    spark,
-    path: str,
-    filename: str,
-    required_keys,
-    what: str,
-    hint: str,
-) -> dict:
-    """Read + validate a stored-artifact sidecar (see
-    :func:`write_json_sidecar`). Raises ValueError with the artifact's
-    own rebuild hint when the sidecar is absent or missing keys."""
-    import json
+def swap_in_staged(spark, path: str, what: str) -> None:
+    """Put a fully written ``<path>.compact`` in place of ``<path>`` —
+    THE staged swap behind every store rewrite (the compactions and
+    the CDC apply). The caller writes the new generation to
+    ``<path>.compact``, sidecar included, so the staged artifact is
+    complete BEFORE any swap; this function then renames ``path`` →
+    ``<path>.old`` and staged → ``path`` and deletes the old
+    generation. The live directory is never written in place.
 
-    hpath, fs = hadoop_path_and_fs(spark, f"{path.rstrip('/')}/{filename}")
-    if not fs.exists(hpath):
-        raise ValueError(
-            f"{what} at {path} has no {filename} sidecar — {hint}"
-        )
-    stream = fs.open(hpath)
+    Crash exposure: a failure before the first rename leaves the live
+    store untouched (a stale ``.compact`` is overwritten by the next
+    attempt); between the two renames ``path`` briefly does not exist
+    — concurrent readers fail safe (no sidecar) and BOTH complete
+    generations remain on disk (rename ``<path>.old`` back, or
+    ``<path>.compact`` in, to recover); after the second rename the
+    new generation is live and ``<path>.old`` is garbage. A failed
+    swap-in (a missing staged generation makes the local Hadoop
+    filesystem RAISE rather than return False) restores the old
+    generation to ``path`` before raising IOError. On object stores
+    without atomic rename (raw S3) front this with a committer, as
+    for any rename-based swap.
+
+    SINGLE WRITER REQUIRED: crash-atomicity covers crashes and
+    concurrent readers, not concurrent writers. An append to ``path``
+    between the caller's staged read and the first rename writes into
+    what becomes ``<path>.old`` and is deleted after the swap — that
+    batch is lost silently. Serialize every merge and rewrite of a
+    store through one writer."""
+    base = path.rstrip("/")
+    staged = base + ".compact"
+    cur, fs = hadoop_path_and_fs(spark, base)
+    new, _ = hadoop_path_and_fs(spark, staged)
+    old, _ = hadoop_path_and_fs(spark, base + ".old")
+    fs.delete(old, True)
+    if not fs.rename(cur, old):
+        raise IOError(f"{what}: could not stage out {base}")
     try:
-        raw = bytes(
-            spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        )
-    finally:
-        stream.close()
-    params = json.loads(raw.decode("utf-8"))
-    missing = set(required_keys) - set(params)
-    if missing:
-        raise ValueError(
-            f"{what} sidecar at {path} is missing keys: {sorted(missing)}"
-        )
-    return params
+        swapped, cause = fs.rename(new, cur), None
+    except Py4JJavaError as err:  # e.g. FileNotFoundException
+        swapped, cause = False, err
+    if not swapped:
+        fs.rename(old, cur)  # restore the previous generation
+        raise IOError(
+            f"{what}: could not swap {staged} in for {base}; "
+            "the previous generation was restored"
+        ) from cause
+    fs.delete(old, True)

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.url import normalize_url, url_domain
+from .util import Sidecar, atomic_append_subdir
 
 
 def web_hygiene_gate(
@@ -108,8 +109,12 @@ def web_hygiene_gate(
 # Stored URL-seen / domain-count index: the cross-batch face of the gate
 # ---------------------------------------------------------------------------
 
-_URL_SIDECAR = "_url_index_params.json"
-_URL_KEYS = ("url_col", "max_per_domain")
+_URL_SIDECAR = Sidecar(
+    "_url_index_params.json",
+    ("url_col", "max_per_domain"),
+    "URL index",
+    "rebuild via write_url_index",
+)
 
 
 def write_url_index(
@@ -126,8 +131,6 @@ def write_url_index(
     freezes ``max_per_domain`` so every later screen applies the same
     cap. Build semantics: ``df`` is an already-admitted corpus — its
     rows count toward the domain budgets and its URLs are 'seen'."""
-    from .util import write_json_sidecar
-
     spark = df.sparkSession
     base = path.rstrip("/")
     normed = df.select(
@@ -141,29 +144,15 @@ def write_url_index(
         F.count(F.lit(1)).cast("long").alias("c")
     ).write.mode("overwrite").parquet(base + "/domcounts")
     # sidecar AFTER the data lands (write_dedup_index ordering)
-    write_json_sidecar(
+    _URL_SIDECAR.write(
         spark,
         base,
-        _URL_SIDECAR,
         {
             "url_col": str(url_col),
             "max_per_domain": (
                 None if max_per_domain is None else int(max_per_domain)
             ),
         },
-    )
-
-
-def _read_url_sidecar(spark, path: str) -> dict:
-    from .util import read_json_sidecar
-
-    return read_json_sidecar(
-        spark,
-        path,
-        _URL_SIDECAR,
-        _URL_KEYS,
-        "URL index",
-        "rebuild via write_url_index",
     )
 
 
@@ -182,9 +171,7 @@ def merge_url_index(
     ROW spends domain budget, while only NEW urls join the seen set
     — re-admitting a URL the caller chose not to dedup still costs
     its domain."""
-    from .util import atomic_append_subdir
-
-    params = _read_url_sidecar(spark, path)
+    params = _URL_SIDECAR.read(spark, path)
     ucol = url_col or str(params["url_col"])
     base = path.rstrip("/")
     normed = batch.select(
@@ -229,7 +216,7 @@ def screen_against_url_index(
     frozen-store reads only — the batch itself spends no budget until
     :func:`merge_url_index` folds the admitted rows back, the
     ingest-loop contract every stored screen obeys."""
-    params = _read_url_sidecar(spark, path)
+    params = _URL_SIDECAR.read(spark, path)
     ucol = url_col or str(params["url_col"])
     cap = params["max_per_domain"]
     base = path.rstrip("/")

@@ -999,16 +999,7 @@ def ingest_micro_batch(
                 )
             )
         if hll_store_path is not None:
-            from .operators.util import read_json_sidecar
-
-            stored = read_json_sidecar(
-                spark,
-                hll_store_path,
-                sketches._SIDECAR,
-                sketches._PARAM_KEYS,
-                "hll sketch store",
-                "rebuild via write_cardinality_sketches",
-            )
+            stored = sketches.HLL_SIDECAR.read(spark, hll_store_path)
             merges.append(
                 lambda: sketches.merge_cardinality_sketches(
                     spark,

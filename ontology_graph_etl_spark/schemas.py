@@ -1,113 +1,24 @@
-"""Pinned StructTypes for every input shape the engine reads.
+"""Pinned StructTypes for the testdata tables (TESTDATA.md).
 
 The reference accesses fields dynamically by dict key or column ordinal
 (reference main.py:60-77, main.py:292-293); here every schema is explicit
 so Spark never infers twice and scans prune columns (SURVEY.md §1.2-1.3).
+The reference-shaped JSONL inputs are pinned beside their fixtures
+(``fixtures.py``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
     FloatType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
     TimestampType,
-)
-
-# ---------------------------------------------------------------------------
-# Reference-parity input schemas (SURVEY.md §1.2, recovered from main.py)
-# ---------------------------------------------------------------------------
-
-#: data/concept.json — JSONL, one concept per line (reference main.py:60-77)
-CONCEPT_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("name", StringType(), True),
-        StructField("semantic_type", StringType(), True),
-        StructField("cui", StringType(), True),
-        StructField("search_type", StringType(), True),
-        StructField("description", StringType(), True),
-        StructField("property_concept", StringType(), True),
-    ]
-)
-
-#: data/concept_hierarchy.json — JSONL (reference main.py:89-90)
-CONCEPT_HIERARCHY_SCHEMA = StructType(
-    [
-        StructField("child_id", LongType(), False),
-        StructField("parent_id", LongType(), False),
-    ]
-)
-
-#: data/concept_property_types.json — JSONL (reference main.py:378-383)
-CONCEPT_PROPERTY_TYPES_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("property_types", ArrayType(StringType()), True),
-        StructField("node_type", StringType(), True),
-    ]
-)
-
-#: data/concept_id_mapping.json — whole-doc dict {str(id) -> entity_id}
-#: (reference main.py:335-336); relationalized to two columns.
-CONCEPT_ID_MAPPING_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("entity_id", LongType(), False),
-    ]
-)
-
-#: Flattened spreadsheet relationship rows (reference main.py:278-302,
-#: metadata main.py:182-266); FIXTURES.md §3.
-RELATIONSHIP_ROW_SCHEMA = StructType(
-    [
-        StructField("sheet_index", IntegerType(), False),
-        StructField("line_no", LongType(), False),
-        StructField("node1_id", StringType(), True),
-        StructField("node1_value", StringType(), True),
-        StructField("node1_type", StringType(), True),
-        StructField("node2_id", StringType(), True),
-        StructField("node2_value", StringType(), True),
-        StructField("node2_type", StringType(), True),
-        StructField("relationship", StringType(), True),
-    ]
-)
-
-#: HTTP enrichment response rows (reference main.py:377-382), relationalized.
-PROPERTY_TYPE_EVENT_SCHEMA = StructType(
-    [
-        StructField("id", LongType(), False),
-        StructField("raw_type", StringType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Property-graph canonical model (GraphFrames convention, SURVEY.md §1.3)
-# ---------------------------------------------------------------------------
-
-NODES_SCHEMA = StructType(
-    [
-        StructField("id", StringType(), False),
-        StructField("label", StringType(), False),
-        StructField("name", StringType(), True),
-        StructField("type", StringType(), True),
-        StructField("properties", MapType(StringType(), StringType()), True),
-    ]
-)
-
-EDGES_SCHEMA = StructType(
-    [
-        StructField("src", StringType(), False),
-        StructField("dst", StringType(), False),
-        StructField("relationship", StringType(), False),
-    ]
 )
 
 # ---------------------------------------------------------------------------
@@ -207,14 +118,3 @@ TESTDATA_SCHEMAS: dict[str, StructType] = {
         ]
     ),
 }
-
-#: Multimodal asset table shape (SURVEY north-star extensions): opaque binary
-#: payload + typed metadata; decode/feature steps are Pandas-UDF plumbing.
-MULTIMODAL_ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("meta", MapType(StringType(), StringType()), True),
-    ]
-)

@@ -1,39 +1,16 @@
-"""Canonical graph sinks (SURVEY.md §2.2 K1/K2 replacement).
+"""File sinks: the JSON-array interop rewrite of the reference's
+converted files (SURVEY.md §2.2 K4), and the deterministic
+training-shard export with its shard-pruned reader.
 
-The reference stages everything through text files and appends across
-runs (main.py:340,360,383) with offset-based recovery. Here the canonical
-store is partitioned parquet with idempotent overwrite — recovery is
-"rerun the lazy plan", and partition layout is chosen so the graph reads
-prune: nodes by ``label``, edges by ``relationship`` (every traversal in
-operators/graph.py filters on exactly these columns first).
+The graph tables themselves are plain parquet written by the pipelines
+(idempotent overwrite — recovery is "rerun the lazy plan"); nothing here
+appends across runs the way the reference's text staging did
+(main.py:340,360,383).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def write_nodes(nodes: DataFrame, path: str) -> None:
-    """Write the canonical nodes table partitioned by label. 14 labels in
-    the reference corpus → 14 partitions; at 100 TB each label's files
-    split further by size, and label-filtered reads scan only their
-    directory."""
-    nodes.write.mode("overwrite").partitionBy("label").parquet(path)
-
-
-def write_edges(edges: DataFrame, path: str) -> None:
-    """Edges partitioned by relationship (16 types in the corpus);
-    relationship-filtered traversals (one_hop, motifs) prune to a single
-    partition directory."""
-    edges.write.mode("overwrite").partitionBy("relationship").parquet(path)
-
-
-def read_nodes(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-def read_edges(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def jsonl_to_json_array(

@@ -753,6 +753,58 @@ def test_ingest_micro_batch_intra_batch_dedup(spark, tmp_path):
     assert all(r.accepted for r in plain.collect())
 
 
+def test_ingest_merge_failures_surface_small(spark, tmp_path, monkeypatch):
+    """Default-run pin of the fold-back pool's failure aggregation
+    (test_ingest_merge_failures_all_surface is the testdata-sized
+    variant): two-row sketch and URL stores, whose screens are the
+    cheapest. One failing merge re-raises its own exception type
+    after the other merge completes; two failing merges surface both
+    causes in one RuntimeError."""
+    import pytest
+
+    from ontology_graph_etl_spark import pipelines
+    from ontology_graph_etl_spark.operators import sketches, webops
+
+    schema = "doc_id long, text string, url string, lang string"
+    ref = spark.createDataFrame(
+        [(0, "alpha beta", "http://a.example/x", "en"),
+         (2, "gamma delta", "http://b.example/y", "de")],
+        schema,
+    )
+    batch = spark.createDataFrame(
+        [(1, "eta theta", "http://c.example/z", "en"),
+         (3, "iota kappa", "http://a.example/w", "fr")],
+        schema,
+    )
+    hp, up = str(tmp_path / "hll"), str(tmp_path / "urls")
+    sketches.write_cardinality_sketches(
+        sketches.build_cardinality_sketches(ref, ["lang"], "doc_id"),
+        hp, ["lang"], "doc_id",
+    )
+    webops.write_url_index(ref, up, "url")
+
+    def boom_hll(*a, **k):
+        raise ValueError("hll merge boom")
+
+    def boom_url(*a, **k):
+        raise KeyError("url merge boom")
+
+    def ingest():
+        pipelines.ingest_micro_batch(
+            spark, batch, "doc_id", "text",
+            hll_store_path=hp, url_index_path=up,
+        )
+
+    monkeypatch.setattr(sketches, "merge_cardinality_sketches", boom_hll)
+    with pytest.raises(ValueError, match="hll merge boom"):
+        ingest()
+    monkeypatch.setattr(webops, "merge_url_index", boom_url)
+    with pytest.raises(RuntimeError, match="2 fold-back merges failed") as err:
+        ingest()
+    assert "hll merge boom" in str(err.value)
+    assert "url merge boom" in str(err.value)
+
+
 def test_ingest_merge_failures_all_surface(spark, sf_dir, tmp_path, monkeypatch):
     """r17 ADVICE pin: when several fold-back merges fail in the
     ingest thread pool, EVERY failure surfaces (aggregate error), not

@@ -519,7 +519,7 @@ def test_screen_pq_ivf_threshold_and_empty_candidates(
     # empty probed list => NULL nearest_sim, never a dup: empty one
     # list's rows out of the store, then probe ONLY that list (its
     # own centroid as the query, nprobe=1)
-    side_path = tmp_path / "pq" / similarity._PQ_SIDECAR
+    side_path = tmp_path / "pq" / similarity._PQ_SIDECAR.filename
     side = json.loads(side_path.read_text())
     stored = spark.read.parquet(idx)
     target = stored.groupBy("list_id").count().orderBy("list_id")

@@ -607,7 +607,7 @@ def test_streaming_ivf_index_maintained_across_batches(
     # retrain
     fresh_path = str(tmp_path / "ivf_fresh")
     from ontology_graph_etl_spark.operators.similarity import (
-        _write_ivf_sidecar,
+        IVF_INDEX_SIDECAR,
         kmeans_assign,
     )
 
@@ -624,7 +624,7 @@ def test_streaming_ivf_index_maintained_across_batches(
         )
     )
     fresh_rows.write.mode("overwrite").parquet(fresh_path)
-    _write_ivf_sidecar(
+    IVF_INDEX_SIDECAR.write(
         spark,
         fresh_path,
         {"num_lists": 8, "train_rounds": 1,
@@ -900,6 +900,44 @@ def test_compact_substring_index_crash_windows(spark, tmp_path):
     shutil.rmtree(path + ".compact")
 
 
+def test_swap_in_staged_overwrites_stale_and_restores(spark, tmp_path):
+    """The one staged swap every store rewrite shares
+    (:func:`util.swap_in_staged`). A stale ``.compact`` (and ``.old``)
+    left by a failed attempt is overwritten by the next staged write,
+    and a successful swap leaves neither sibling behind. With the
+    staged generation missing, the swap-in rename fails (the local
+    Hadoop filesystem raises rather than returning False): the live
+    generation must be back at ``path`` and the IOError must name
+    both paths."""
+    import os
+
+    import pytest
+
+    from ontology_graph_etl_spark.operators.util import swap_in_staged
+
+    def ids():
+        return sorted(r.id for r in spark.read.parquet(path).collect())
+
+    path = str(tmp_path / "store")
+    spark.range(3).write.parquet(path)
+    os.makedirs(path + ".compact")
+    with open(path + ".compact/garbage.bin", "wb") as f:
+        f.write(b"\x00not parquet")
+    os.makedirs(path + ".old")
+    spark.range(5).write.mode("overwrite").parquet(path + ".compact")
+    swap_in_staged(spark, path, "test swap")
+    assert ids() == list(range(5))
+    assert not os.path.exists(path + ".compact")
+    assert not os.path.exists(path + ".old")
+
+    with pytest.raises(IOError, match="test swap") as err:
+        swap_in_staged(spark, path, "test swap")
+    assert path + ".compact" in str(err.value)
+    assert f"for {path};" in str(err.value)
+    assert ids() == list(range(5))
+    assert not os.path.exists(path + ".old")
+
+
 def test_merge_substring_index_auto_compacts(spark, tmp_path):
     """merge_substring_index self-triggers compaction once the
     appended fraction passes auto_compact_ratio: duplicate-heavy
@@ -912,10 +950,6 @@ def test_merge_substring_index_auto_compacts(spark, tmp_path):
         merge_substring_index,
         screen_against_substring_index,
         write_substring_index,
-    )
-    from ontology_graph_etl_spark.operators.util import (
-        read_json_sidecar,
-        write_json_sidecar,
     )
 
     corpus = spark.createDataFrame(
@@ -953,11 +987,9 @@ def test_merge_substring_index_auto_compacts(spark, tmp_path):
     assert got == want
 
     # legacy sidecar (no counters): first merge self-seeds via compact
-    legacy = read_json_sidecar(
-        spark, path, _SUBSTR_INDEX_SIDECAR, {"min_len"}, "t", "t"
-    )
+    legacy = _SUBSTR_INDEX_SIDECAR.read(spark, path)
     legacy.pop("n_rows"), legacy.pop("appended_rows")
-    write_json_sidecar(spark, path, _SUBSTR_INDEX_SIDECAR, legacy)
+    _SUBSTR_INDEX_SIDECAR.write(spark, path, legacy)
     params = merge_substring_index(spark, path, corpus)
     assert params["n_rows"] == distinct and params["appended_rows"] == 0
 
@@ -1298,6 +1330,65 @@ def test_frozen_lm_append_crash_atomic(spark, tmp_path):
         .collect()
     }
     assert final == before
+
+
+def test_score_with_frozen_lm_counts_arg_matches_store_read(
+    spark, tmp_path
+):
+    """build_ccnet_store scores the reference with ``counts=`` — the
+    count table it has just written — instead of re-reading the
+    store. That is only sound while the passed table equals the
+    store's recursive read + group-sum. Pin it on a tiny CCNet store:
+    one probe batch (seen and unseen n-grams, an empty doc) scores
+    identically with and without ``counts=``."""
+    from pyspark.sql import functions as F
+
+    from ontology_graph_etl_spark.operators import gatestats
+    from ontology_graph_etl_spark.operators.textops import language_id
+
+    ref = spark.createDataFrame(
+        [
+            (1, "the cat sat on the mat and the dog sat too"),
+            (2, "a dog and a cat are on the mat in the sun"),
+            (3, "zzq xxv qqz vvx"),
+            (4, "the sun is on the dog and it is warm"),
+        ],
+        "doc_id long, text string",
+    )
+    store = str(tmp_path / "ccnet")
+    gatestats.build_ccnet_store(ref, store, langs=["en", "und"])
+    # the count table exactly as build_ccnet_store derives and passes it
+    tagged = language_id(ref, "text").where(
+        F.col("lang_pred").isin("en", "und")
+    )
+    counts = gatestats.build_lm_counts(
+        tagged, "doc_id", "text", "lang_pred"
+    ).localCheckpoint()
+    probe = language_id(
+        spark.createDataFrame(
+            [
+                (10, "the cat sat on the warm mat"),
+                (11, "the zebra is on the mat"),
+                (12, "xxv zzq unseen tokens"),
+                (13, ""),
+            ],
+            "doc_id long, text string",
+        ),
+        "text",
+    )
+
+    def score(**kw):
+        return {
+            r.doc_id: (r.lang_pred, r.mean_logprob)
+            for r in gatestats.score_with_frozen_lm(
+                spark, store + "/lm", probe, **kw
+            ).collect()
+        }
+
+    without = score()
+    assert score(counts=counts) == without
+    assert len(without) == 4
+    assert sum(v[1] is not None for v in without.values()) >= 2
 
 
 def test_frozen_ccnet_store_matches_train_on_self(spark, sf_dir, tmp_path):
